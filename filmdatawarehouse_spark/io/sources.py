@@ -12,6 +12,7 @@ effect the reference achieves by hand, for free, everywhere.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -68,20 +69,28 @@ def read_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, Data
     return {n: read_table(spark, sf_dir, n) for n in names}
 
 
-# Target input volume per spread task. The r16 round keyed spread width
-# to ``defaultParallelism`` and the driver's 32-core bench INVERTED
-# (VERDICT r16: pipeline_curate_documents 2.24x slower at local[32] than
-# local[8] on the same commit) — partition width grew with the machine
-# while the data stayed tiny, and every spread stage paid per-task
-# Python-worker + scheduling cost linear in width. Width must be keyed
-# to DATA VOLUME: at ~32 KiB of Catalyst-estimated input per task the
-# sf0.1 documents table (~255 KiB projected to doc_id+text) spreads 8
-# wide — exactly the width the driver's own 8-core control run proved
-# out — and a 100 TB scan wants (and gets) every core. A/B at local[32]
-# sf0.1 (min over 8 cold runs, r17): 32 KiB beat both the 64 KiB target
-# and the r16 core-count width on every dedup/containment/pipeline
-# query. Parameterised for production tuning; the local default is a
-# volume rule, not a core-count constant.
+# ---------------------------------------------------------------------
+# Spread policy: the one place that decides whether a frame is
+# repartitioned before heavy work, and how wide. Callers hand over a
+# frame and its keys (plus, for a mid-plan frame, the scan it came from)
+# and get a frame back:
+#
+# - ``spread_unsplittable_scan``: a scan feeding heavy per-row work;
+# - ``spread_heavy_stage``: the same, around one stage whose output is
+#   then put back into one partition when the scan was one partition;
+# - ``spread_mid_plan``: a mid-plan frame feeding a compute-explosive
+#   join or verify, gated and sized by its source scan.
+#
+# Each decision probes its scan at most once for partition count and
+# once for size (both driver-side, no job).
+# ---------------------------------------------------------------------
+
+# Target input volume per spread task. At ~32 KiB of Catalyst-estimated
+# input per task the sf0.1 documents table (~255 KiB projected to
+# doc_id+text) spreads 8 wide, the width the 8-core control run proved
+# out, and a 100 TB scan saturates every core. A/B at local[32] sf0.1
+# (min over 8 cold runs): 32 KiB beat both a 64 KiB target and a
+# core-count width on every dedup/containment/pipeline query.
 SPREAD_TARGET_BYTES = int(
     os.environ.get("SPARK_GRAFT_SPREAD_TARGET_BYTES", str(32 * 1024))
 )
@@ -105,17 +114,17 @@ def plan_size_bytes(df: DataFrame) -> int | None:
 
 
 def adaptive_spread_width(df: DataFrame) -> int:
-    """Data-volume-keyed spread width: ceil(estimated bytes /
+    """Spread width keyed to data volume: ceil(estimated bytes /
     ``SPREAD_TARGET_BYTES``), clamped to [1, defaultParallelism].
 
-    The clamp keeps the rule scale-correct at both ends: tiny local
-    inputs get only as many tasks as their volume amortizes (r16's
-    core-count-keyed width anti-scaled at local[32] — module constant
-    above), and at production volume the rule saturates at the session's
-    parallelism instead of inventing million-partition exchanges. With
-    no usable size estimate, fall back to the session parallelism (the
-    pre-r17 behavior; at scale the caller's sub-parallel gate is False
-    and no spread happens at all)."""
+    Never the core count alone: a ``defaultParallelism`` width made
+    ``pipeline_curate_documents`` 2.24x slower at local[32] than at
+    local[8] on the same commit, because width grew with the machine
+    while the data stayed tiny and every spread stage paid per-task
+    Python-worker and scheduling cost linear in width. The upper clamp
+    keeps production volumes at the session's parallelism instead of
+    million-partition exchanges. With no usable size estimate, fall
+    back to the session parallelism."""
     spark = df.sparkSession
     dp = spark.sparkContext.defaultParallelism
     size = plan_size_bytes(df)
@@ -124,51 +133,11 @@ def adaptive_spread_width(df: DataFrame) -> int:
     return max(1, min(dp, -(-size // SPREAD_TARGET_BYTES)))
 
 
-def spread_unsplittable_scan(df: DataFrame, *keys: str) -> DataFrame:
-    """Scale-adaptive fix for UNSPLITTABLE input feeding a heavy per-row
-    stage (guide §2.5 "one huge unsplittable file … repartition
-    immediately after the read").
-
-    Parquet scan parallelism is bounded by row-group count, and a
-    single-file single-row-group table (every certification-SF table
-    here) plans a ONE-TASK scan — so a zero-shuffle Arrow stage fused
-    onto it (MinHash/ngram/SimHash signatures) runs on one core at any
-    ``local[N]``, capping both wall time and the measured core scaling.
-
-    Adaptive in BOTH directions (r17): the spread fires only when the
-    input's planned partition count is below the session's default
-    parallelism (at production scale the scan has file/row-group counts
-    >> cores, the condition is false and the plan is untouched), and the
-    width it spreads TO is keyed to data volume via
-    ``adaptive_spread_width`` — never to the core count, which the r16
-    driver bench proved anti-scales on tiny inputs (more cores = more
-    width = more per-task overhead over the same rows). Hash-on-key
-    (not round-robin) keeps the assignment deterministic under task
-    retry (guide §2.5 SPARK-38388) and skips round-robin's
-    sort-before-repartition. Apply ONLY above compute-heavy per-row
-    stages: for cheap JVM projections the added exchange costs more than
-    the parallelism pays (measured r16 — the containment shingle explode
-    got SLOWER with it; OPTIMIZATION_r16.md).
-    """
-    nparts = planned_partitions(df)
-    if nparts is None:
-        return df
-    spark = df.sparkSession
-    if nparts >= spark.sparkContext.defaultParallelism:
-        return df
-    width = adaptive_spread_width(df)
-    if width <= nparts:
-        return df
-    from pyspark.sql import functions as F
-
-    return df.repartition(width, *[F.col(k) for k in keys])
-
-
 def planned_partitions(df: DataFrame) -> int | None:
     """``df``'s PLANNED partition count (None when the RDD probe cannot
     plan the frame). NOTE: probing ``df.rdd`` forces driver-side physical
     planning of the frame — cheap for the scans this gates (their plans
-    are one node) but not free; call once per query build, on the source
+    are one node) but not free; call once per decision, on the source
     scan, not in a loop."""
     try:
         return df.rdd.getNumPartitions()
@@ -182,19 +151,94 @@ def scan_is_subparallel(df: DataFrame) -> bool:
 
     Only meaningful for scans and cached frames: a not-yet-executed
     shuffle reports the static ``spark.sql.shuffle.partitions``, not
-    what AQE will coalesce it to, so probe the SOURCE scan (whose split
-    count is real) when deciding for a mid-plan frame. Queries use this
-    to give compute-explosive exchanges (candidate self-joins whose
-    downstream work is quadratic in posting-list length) an explicit
-    key-partitioned width in the local regime, where AQE's bytes-based
-    coalescing sees a tiny exchange and serializes the heavy join onto
-    one task; at production scale the condition is False and the plan
-    keeps AQE's sizing."""
+    what AQE will coalesce it to, so ``spread_mid_plan`` probes the
+    SOURCE scan, whose split count is real."""
     spark = df.sparkSession
     nparts = planned_partitions(df)
     if nparts is None:
         return False
     return nparts < spark.sparkContext.defaultParallelism
+
+
+def _spread_scan(df: DataFrame, keys: tuple[str, ...]) -> tuple[DataFrame, bool]:
+    """The scan rule: (frame, whether its one partition was spread)."""
+    nparts = planned_partitions(df)
+    if nparts is None or nparts >= df.sparkSession.sparkContext.defaultParallelism:
+        return df, False
+    width = adaptive_spread_width(df)
+    if width <= nparts:
+        return df, False
+    return df.repartition(width, *keys), nparts == 1
+
+
+def spread_unsplittable_scan(df: DataFrame, *keys: str) -> DataFrame:
+    """Hash-spread a scan that feeds heavy per-row work (guide §2.5 "one
+    huge unsplittable file … repartition immediately after the read").
+
+    Parquet scan parallelism is bounded by row-group count, and a
+    single-file single-row-group table (every certification-SF table
+    here) plans a ONE-TASK scan, so a zero-shuffle stage fused onto it
+    (MinHash/n-gram/SimHash signatures, byte histograms) runs on one
+    core at any ``local[N]``. Measured at sf0.1: 2.4 s -> 0.9 s warm for
+    the n-gram signatures, 2.1 s -> 0.9 s for the native byte stats, and
+    on the shared shingle frame's cold consumers −29 % (containment),
+    −10 % (prefix filter), −5 % (BFS) and flat (containment prefix).
+
+    Fires only when the scan plans fewer partitions than the session's
+    default parallelism AND the volume width (``adaptive_spread_width``)
+    is larger than that count; at production scale split counts exceed
+    the cores and the plan is untouched. Hash-on-key, not round-robin,
+    keeps the assignment deterministic under task retry (SPARK-38388)
+    and skips round-robin's sort. Apply ONLY above compute-heavy per-row
+    stages: over a cheap JVM projection the added exchange costs more
+    than the parallelism pays (OPTIMIZATION_r16.md)."""
+    return _spread_scan(df, keys)[0]
+
+
+def spread_heavy_stage(
+    df: DataFrame, *keys: str, stage: Callable[[DataFrame], DataFrame]
+) -> DataFrame:
+    """``stage`` over ``spread_unsplittable_scan(df, *keys)``, with the
+    stage's output put back into one partition when the spread fired
+    from a one-partition scan.
+
+    For a stage whose output is persisted and read by many cheap stages:
+    spreading alone made the full pair queries SLOWER, because the
+    persisted signature frame kept the spread width and every
+    downstream cache-reading map stage (banding join, census, both
+    verify joins: ~12 stages) paid that many trivial tasks instead of 1,
+    ~2 s of scheduling at sf0.1. Spread-for-compute plus
+    compact-for-cache keeps the one expensive stage parallel and the
+    cheap ones single-task. A multi-partition scan with fewer splits
+    than cores (64 row-groups on 128 cores) still spreads but keeps the
+    spread layout: funnelling a real volume into one partition would
+    make every downstream stage single-task and risk executor OOM."""
+    spread, compact = _spread_scan(df, keys)
+    out = stage(spread)
+    return out.repartition(1) if compact else out
+
+
+def spread_mid_plan(frame: DataFrame, *keys: str, scan: DataFrame) -> DataFrame:
+    """Key-partition a mid-plan ``frame`` that feeds compute-explosive
+    work (a candidate self-join quadratic in posting-list length, a
+    per-candidate ``array_intersect`` verify), sized by its source
+    ``scan``.
+
+    Fires whenever ``scan`` plans fewer partitions than the session's
+    default parallelism, at ``adaptive_spread_width(scan)`` — even at
+    width 1, unlike the scan rule. In that regime AQE's bytes-based
+    coalescing sees a small exchange (the prefix-filter candidate frame
+    is ~1.4 MB at sf0.1) and serializes the heavy stage onto one task;
+    the verify ran 2-2.8 s single-task before this. At production scale
+    the gate is False and AQE keeps sizing the exchange.
+
+    Sizing by the source scan rather than by ``frame``'s own estimate is
+    a deliberate approximation for the local regime: the frame is a
+    not-yet-executed shuffle whose partition count and size Catalyst
+    cannot report reliably, while the scan's are real."""
+    if not scan_is_subparallel(scan):
+        return frame
+    return frame.repartition(adaptive_spread_width(scan), *keys)
 
 
 def read_jdbc_table(

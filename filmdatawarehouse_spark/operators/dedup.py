@@ -32,6 +32,7 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from filmdatawarehouse_spark.io.sources import spread_heavy_stage
 from filmdatawarehouse_spark.operators.cache import managed_persist
 
 MERSENNE_P = 2_147_483_647  # 2^31 - 1
@@ -84,50 +85,6 @@ def word_shingles(toks: Column, n: int = 3) -> Column:
     """Distinct word n-gram shingles from a token array (the MinHash
     input form; see ``word_ngrams_all`` for the binding caveat)."""
     return F.array_distinct(word_ngrams_all(toks, n))
-
-
-def _spread_for_compute(
-    df: DataFrame, *keys: str
-) -> tuple[DataFrame, bool]:
-    """``spread_unsplittable_scan`` plus a COMPACT flag, so the caller
-    can restore the heavy stage's output to the pre-spread layout before
-    persisting it. Measured r16: spreading alone made the full pair
-    queries SLOWER — the persisted signature frame then holds the spread
-    width and every downstream cache-reading map stage (the banding
-    join, census, both verify joins: ~12 stages) pays that many trivial
-    tasks instead of 1, ~2 s of pure scheduling at sf0.1.
-    Spread-for-compute + compact-for-cache keeps the one expensive stage
-    parallel and the many cheap stages single-task.
-
-    Two adaptivity rules (r17):
-
-    - the spread WIDTH is keyed to data volume, never the core count
-      (``io.sources.adaptive_spread_width`` — the r16
-      ``defaultParallelism`` width anti-scaled at the driver's
-      local[32]: VERDICT r16 item 1);
-    - the compact flag fires ONLY when the pre-spread layout was a
-      single partition (the tiny-local-file regime this whole mechanism
-      exists for). A production scan with fewer splits than cores —
-      e.g. 64 row-groups on 128 cores — still spreads, but its
-      signature frame is NOT funneled into one partition before
-      persist (ADVICE r16: the unconditional ``repartition(1)`` made
-      every downstream stage single-task and risked executor OOM at
-      real volumes); it keeps the spread layout, which at such volumes
-      is the parallelism the cache readers want anyway."""
-    from filmdatawarehouse_spark.io.sources import (
-        adaptive_spread_width,
-        planned_partitions,
-    )
-
-    orig = planned_partitions(df)
-    spark = df.sparkSession
-    if orig is None or orig >= spark.sparkContext.defaultParallelism:
-        return df, False
-    width = adaptive_spread_width(df)
-    if width <= orig:
-        return df, False
-    out = df.repartition(width, *[F.col(k) for k in keys])
-    return out, orig == 1
 
 
 def word_shingle_frame(
@@ -207,7 +164,7 @@ def minhash_signatures(
 
     With ``keep_shingles`` the hashed shingle array passes through, so the
     candidate and verify branches are projections of this one frame —
-    persist it (see ``_lsh_verified_pairs``) to share the Python stage
+    persist it (see ``_verified_pairs_from_sigs``) to share the Python stage
     across branches.
     """
     import numpy as np
@@ -383,47 +340,18 @@ def minhash_dedup_pairs(
     Returns (doc_id_a, doc_id_b, jaccard).
     """
     # spread BEFORE the shingle projection so the per-shingle md5 chain
-    # and the numpy signature stage both run post-exchange (parallel);
-    # the flag compacts the persisted signature frame back afterwards
-    # (_spread_for_compute has the measured why)
-    base, compact = _spread_for_compute(
-        docs.select(id_col, text_col), id_col
-    )
-    shingled = word_shingle_frame(base, id_col, text_col, shingle_words)
-    return _lsh_verified_pairs(
-        shingled, threshold, id_col, num_perm, seed, cache=cache,
-        bucket_cap=bucket_cap, n_docs=n_docs, compact=compact,
-    )
-
-
-def _lsh_verified_pairs(
-    shingled: DataFrame,
-    threshold: float,
-    id_col: str,
-    num_perm: int,
-    seed: int,
-    band_rows: int = BAND_ROWS,
-    cache: bool = True,
-    bucket_cap: int | None = BUCKET_CAP,
-    n_docs: int | None = None,
-    compact: bool = False,
-) -> DataFrame:
-    """Shared LSH-candidates + exact-Jaccard-verify tail.
-
-    One ``mapInPandas`` stage defines both the signatures and the shingle
-    sets (``keep_shingles``); the candidate branch and both verify branches
-    are projections of that frame. A Python stage is opaque to Catalyst —
-    branches can't be column-pruned into it, they re-execute it — so the
-    frame is persisted by default (MEMORY_AND_DISK): one shingle+signature
-    pass instead of three. Spark evicts LRU under pressure; pass
-    ``cache=False`` to opt out (e.g. single-branch custom tails).
-    """
-    sigs = minhash_signatures(
-        shingled, F.col("shingles"), id_col, num_perm, seed, keep_shingles=True
+    # and the numpy signature stage both run post-exchange (parallel)
+    sigs = spread_heavy_stage(
+        docs.select(id_col, text_col),
+        id_col,
+        stage=lambda base: minhash_signatures(
+            word_shingle_frame(base, id_col, text_col, shingle_words),
+            F.col("shingles"), id_col, num_perm, seed, keep_shingles=True,
+        ),
     )
     return _verified_pairs_from_sigs(
-        sigs, threshold, id_col, num_perm, band_rows, cache, bucket_cap,
-        n_docs=n_docs, compact=compact,
+        sigs, threshold, id_col, num_perm, cache=cache,
+        bucket_cap=bucket_cap, n_docs=n_docs,
     )
 
 
@@ -436,15 +364,17 @@ def _verified_pairs_from_sigs(
     cache: bool = True,
     bucket_cap: int | None = BUCKET_CAP,
     n_docs: int | None = None,
-    compact: bool = False,
 ) -> DataFrame:
     """Banding candidates + exact-Jaccard verify over a prebuilt
-    (id, sig_*, shingles) frame (persisted so the three plan branches share
-    the one Python stage). ``compact``: the input was spread for the
-    signature compute — restore the pre-spread single-partition cache
-    layout before persisting (_spread_for_compute has the measurement)."""
-    if compact:
-        sigs = sigs.repartition(1)
+    (id, sig_*, shingles) frame.
+
+    The signature frame comes out of one ``mapInPandas`` stage, which is
+    opaque to Catalyst: the candidate branch and both verify branches
+    can't be column-pruned into it, they re-execute it. So it is
+    persisted by default (MEMORY_AND_DISK): one shingle+signature pass
+    instead of three. Spark evicts LRU under pressure; pass
+    ``cache=False`` to opt out (e.g. single-branch custom tails).
+    """
     if cache:
         sigs = managed_persist(sigs)
     cands = lsh_candidate_pairs(
@@ -639,15 +569,11 @@ def byte_ngram_signatures(
         + ", ".join(f"{s} long" for s in sig_names)
         + ", shingles array<long>"
     )
-    # heavy per-row numpy stage fused onto the scan: spread unsplittable
-    # local input across cores first (adaptive no-op at scale — r16,
-    # measured 2.4 s -> 0.9 s warm at sf0.1), then compact the output
-    # back so the persisted frame keeps its pre-spread layout
-    base, compact = _spread_for_compute(
-        docs.select(id_col, text_col), id_col
+    return spread_heavy_stage(
+        docs.select(id_col, text_col),
+        id_col,
+        stage=lambda base: base.mapInPandas(gen, schema),
     )
-    out = base.mapInPandas(gen, schema)
-    return out.repartition(1) if compact else out
 
 
 def ngram_jaccard_pairs(
@@ -694,16 +620,6 @@ def simhash_values(
     import numpy as np
     import pandas as pd
 
-    # the per-token md5 projection AND the numpy bit-sum stage are heavy
-    # per-row work on the scan task: spread unsplittable local input
-    # (adaptive no-op at scale), compacting the small output afterwards
-    spread_docs, compact = _spread_for_compute(
-        docs.select(id_col, text_col), id_col
-    )
-    base = spread_docs.select(
-        F.col(id_col),
-        F.transform(F.split(F.col(text_col), " "), _hash60).alias("_h"),
-    )
     shifts = np.arange(SIMHASH_BITS, dtype=np.int64)
 
     def gen(batches):
@@ -722,8 +638,16 @@ def simhash_values(
                 }
             )
 
-    out = base.mapInPandas(gen, f"{id_col} long, simhash long")
-    return out.repartition(1) if compact else out
+    def stage(spread_docs: DataFrame) -> DataFrame:
+        # the per-token md5 projection is heavy per-row work too, so it
+        # runs after the spread, with the numpy bit-sum
+        hashed = spread_docs.select(
+            F.col(id_col),
+            F.transform(F.split(F.col(text_col), " "), _hash60).alias("_h"),
+        )
+        return hashed.mapInPandas(gen, f"{id_col} long, simhash long")
+
+    return spread_heavy_stage(docs.select(id_col, text_col), id_col, stage=stage)
 
 
 def simhash_pairs(

@@ -211,8 +211,6 @@ def byte_stats(assets: DataFrame) -> DataFrame:
 
     from filmdatawarehouse_spark.io.sources import spread_unsplittable_scan
 
-    # same sub-parallel-input spread as the native twin (adaptive
-    # no-op at scale); output is per-asset rows, nothing persisted wide
     return spread_unsplittable_scan(
         assets.select("asset_id", "payload"), "asset_id"
     ).mapInPandas(compute, schema=BYTE_STATS_SCHEMA)
@@ -250,10 +248,7 @@ def byte_stats_native(assets: DataFrame) -> DataFrame:
         lambda p: F.conv(p, 16, 10).cast("int"),
     )
     # the hex→conv per-byte explosion is heavy per-row JVM work fused
-    # onto the scan: spread unsplittable local input first (adaptive
-    # no-op at scale — r16, measured 2.1 s -> 0.9 s warm at sf0.1; the
-    # result is a per-asset aggregate, so nothing downstream pays a
-    # wide-cache tax)
+    # onto the scan
     from filmdatawarehouse_spark.io.sources import spread_unsplittable_scan
 
     assets = spread_unsplittable_scan(

@@ -22,7 +22,7 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from filmdatawarehouse_spark.io.sources import read_table
+from filmdatawarehouse_spark.io.sources import read_table, spread_mid_plan
 from filmdatawarehouse_spark.operators import dedup as dd
 from filmdatawarehouse_spark.operators import text as tx
 from filmdatawarehouse_spark.operators.similarity import (
@@ -318,6 +318,10 @@ CONTAIN_T = 0.8
 CONTAIN_DF_CAP = 50
 
 
+def _docs_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return read_table(spark, sf_dir, "documents").select("doc_id", "text")
+
+
 def _word_shingle_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, shingle) rows of distinct word 3-shingles — the shared
     derivation for the containment and prefix-filter pair queries. Uses
@@ -328,20 +332,12 @@ def _word_shingle_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     docstring pins; both queries carried it until r06). Short/empty docs
     get an empty array → no rows; per-doc distinctness comes from
     word_shingles' array_distinct, so no row-level distinct is needed."""
+    from filmdatawarehouse_spark.io.sources import spread_unsplittable_scan
     from filmdatawarehouse_spark.operators.dedup import word_shingles
 
-    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    # volume-keyed spread of the explode input (r17): the shared frame
-    # is built ONCE per cold query from a one-task scan — ~1 s of
-    # single-task split+shingle+explode work in every consumer's cold
-    # profile. The r16 negative was the width-32 variant (wide persisted
-    # layout taxing every cache reader); at the volume-keyed width 8 the
-    # interleaved A/B wins on all four consumers (containment −29 %,
-    # prefix_filter −10 %, BFS −5 %, containment_prefix flat; 3
-    # iterations, mins and medians agree). Adaptive no-op at scale.
-    from filmdatawarehouse_spark.io.sources import spread_unsplittable_scan
-
-    docs = spread_unsplittable_scan(docs, "doc_id")
+    # the shared frame is built once per cold query from a one-task
+    # scan: ~1 s of single-task split+shingle+explode work
+    docs = spread_unsplittable_scan(_docs_scan(spark, sf_dir), "doc_id")
     with_toks = docs.select(
         "doc_id", F.split(F.col("text"), " ").alias("_toks")
     )
@@ -386,27 +382,12 @@ def q_text_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("shingle")
     )
     kept = sh.join(rare, "shingle", "left_semi")
-    # local sub-parallel regime (probed on the SOURCE scan — r16): the
-    # pair self-join below explodes to C(df,2) rows per shingle, work
-    # AQE's bytes-based coalescing serializes onto one task because the
-    # kept frame's shuffle is only a few MB; pre-partition the persisted
-    # frame by the join key so both self-join sides inherit a parallel
-    # layout (no extra exchange in the join itself). At scale the
-    # condition is False and AQE keeps sizing the exchange. The width is
-    # keyed to CORPUS VOLUME, not the core count (r17 — the r16
-    # defaultParallelism width anti-scaled at the driver's local[32]:
-    # 32 one-row-group-sized tasks per downstream stage; VERDICT r16).
-    docs_scan = read_table(spark, sf_dir, "documents").select(
-        "doc_id", "text"
+    # the pair self-join below explodes to C(df,2) rows per shingle:
+    # partition the persisted frame by the join key so both self-join
+    # sides inherit the layout (no extra exchange in the join itself)
+    kept = managed_persist(
+        spread_mid_plan(kept, "shingle", scan=_docs_scan(spark, sf_dir))
     )
-    from filmdatawarehouse_spark.io.sources import (
-        adaptive_spread_width,
-        scan_is_subparallel,
-    )
-
-    if scan_is_subparallel(docs_scan):
-        kept = kept.repartition(adaptive_spread_width(docs_scan), "shingle")
-    kept = managed_persist(kept)
     sizes = kept.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a = kept.select(F.col("shingle"), F.col("doc_id").alias("doc_id_a"))
     b = kept.select(F.col("shingle"), F.col("doc_id").alias("doc_id_b"))
@@ -2425,27 +2406,13 @@ def q_text_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    # local sub-parallel regime (r17, measured via tools/profile_stages):
-    # the candidate frame's distinct exchange is ~1.4 MB, so AQE
-    # coalesces it to ONE partition and the verification stage — an
-    # array_intersect over the full shingle arrays PER CANDIDATE PAIR,
-    # the query's heaviest per-row work — ran 2-2.8 s single-task. The
-    # verify joins are broadcasts (sets is bounded), so an explicit
-    # volume-keyed repartition of the tiny candidate frame widens the
-    # verify stage without adding any join exchange. At scale the gate
-    # is False and AQE keeps sizing the exchange.
-    from filmdatawarehouse_spark.io.sources import (
-        adaptive_spread_width,
-        scan_is_subparallel,
+    # the verify below is an array_intersect over the full shingle
+    # arrays per candidate pair, the query's heaviest per-row work; its
+    # joins are broadcasts (sets is bounded), so partitioning the small
+    # candidate frame widens the verify without adding a join exchange
+    cand = spread_mid_plan(
+        cand, "doc_id_a", "doc_id_b", scan=_docs_scan(spark, sf_dir)
     )
-
-    docs_scan = read_table(spark, sf_dir, "documents").select(
-        "doc_id", "text"
-    )
-    if scan_is_subparallel(docs_scan):
-        cand = cand.repartition(
-            adaptive_spread_width(docs_scan), "doc_id_a", "doc_id_b"
-        )
 
     # persisted: consumed by both the a-side and b-side verification
     # joins. Derived from the CACHED windowed frame (same rows per doc
@@ -2783,22 +2750,10 @@ def q_text_containment_prefix_pairs(
         )
         .distinct()
     )
-    # same sub-parallel-regime verify widening as
-    # q_text_prefix_filter_pairs (r17, measured there via
-    # tools/profile_stages: the per-candidate array_intersect verify ran
-    # single-task behind the AQE-coalesced ~1.4 MB candidate exchange)
-    from filmdatawarehouse_spark.io.sources import (
-        adaptive_spread_width,
-        scan_is_subparallel,
+    # same verify widening as q_text_prefix_filter_pairs
+    cand = spread_mid_plan(
+        cand, "doc_id_a", "doc_id_b", scan=_docs_scan(spark, sf_dir)
     )
-
-    docs_scan = read_table(spark, sf_dir, "documents").select(
-        "doc_id", "text"
-    )
-    if scan_is_subparallel(docs_scan):
-        cand = cand.repartition(
-            adaptive_spread_width(docs_scan), "doc_id_a", "doc_id_b"
-        )
     sets = ranked.groupBy("doc_id").agg(
         F.sort_array(F.collect_list("shingle")).alias("arr"),
         F.count(F.lit(1)).alias("n_sh"),

@@ -199,6 +199,16 @@ def test_include_takes_priority_filler_slots():
     assert "q05" in window
 
 
+def test_include_duplicate_name_takes_one_slot():
+    ledger = {n: 7 for n in REG}
+    ledger["q05"] = 6
+    window = derive_window(
+        REG, ledger, 8, defer=[], window_size=3,
+        include=["q09", "q10", "q09"],
+    )
+    assert window == ["q09", "q10", "q05"]
+
+
 def test_include_validates_names_and_capacity():
     import pytest as _pytest
 
